@@ -1,8 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.core.GraftSession
 
 /** Benchmark main: every SparkEntry query timed at
   * SPARK_GRAFT_SF_DIR.
+  *
+  * Usage: runMain graft.Bench [names-csv] — the optional argument
+  * times only the named queries (an inner-loop stopwatch; a subset
+  * bills a family's shared stage to its first member in the subset,
+  * so compare like-for-like subsets). Sweeps: SPARK_GRAFT_BENCH_N
+  * (default 3).
   *
   * Protocol (interference-proof, per r4 verdict): instead of running
   * all n repetitions of one query back-to-back — which lets a
@@ -24,38 +35,43 @@ import org.apache.spark.sql.SparkSession
   * on its own PRECEDING stdout line and the final line carries the
   * stable-order compact array — the r15-verdict-prescribed fallback.
   *
-  * Memo honesty (r15 verdict #3): every per-(session, dir) family
-  * memo is cleared via [[MemoRegistry.reset]] at each sweep boundary,
-  * so each sweep pays each shared stage exactly once and the
-  * pointwise-min samples measure real computation, not checkpoint
-  * reads. Queries still share stages WITHIN a sweep — the legitimate
-  * production shape.
+  * Shared stages: every [[MemoRegistry.shared]] stage is dropped via
+  * [[MemoRegistry.reset]] at each sweep boundary, so each sweep pays
+  * each shared stage exactly once and the pointwise-min samples
+  * measure real computation, not checkpoint reads. Queries still
+  * share stages WITHIN a sweep — the legitimate production shape.
+  *
+  * Failures are loud: a query that throws is reported on stderr with
+  * its name; one that throws in a timed sweep is also listed in the
+  * final line's "failed" array, and Bench exits 1 after writing its
+  * files.
   */
 object Bench {
+  /** Wall seconds of `fn(spark, dir).count()`; None (reported on
+    * stderr) when the query throws.
+    */
+  def time(spark: SparkSession, name: String,
+           fn: (SparkSession, String) => DataFrame, dir: String): Option[Double] = {
+    val t0 = System.nanoTime()
+    try { fn(spark, dir).count(); Some((System.nanoTime() - t0) / 1e9) }
+    catch { case NonFatal(e) =>
+      System.err.println(s"[bench] $name failed at $dir: $e")
+      None
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val sweeps = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
+    val spark = GraftSession.get()
+    val cpus = GraftSession.cpus
+    val queries = args.headOption.map(_.split(",").toSeq)
+      .fold(SparkEntry.queries.toSeq)(_.map(n => n -> SparkEntry.queries(n)))
+      .sortBy(_._1)
     // Warm codegen/JIT per query plan at the smallest SF so timed
     // runs measure steady-state execution, not compiler startup.
-    queries.foreach { case (_, fn) =>
-      try fn(spark, warmDir).count() catch { case _: Throwable => }
-    }
-    def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).count() catch { case _: Throwable => return -1.0 }
-      (System.nanoTime() - t0) / 1e9
-    }
+    queries.foreach { case (name, fn) => time(spark, name, fn, warmDir) }
     // Environment fingerprint (r6 verdict #7): loadavg + cpu count +
     // a ~1 s spin-calibration constant, recorded per epoch so a
     // uniformly-inflated epoch (external load, a slower machine) is
@@ -84,25 +100,24 @@ object Bench {
     // times, and without this the interleaved sweeps would bill every
     // query a cold-cache premium the old numbers never paid —
     // cross-round comparability requires warm-state samples either way.
-    val sweepTimes: Seq[Seq[Double]] =
+    val sweepTimes: Seq[Seq[Option[Double]]] =
       (0 to sweeps).map { _ =>
         MemoRegistry.reset()
-        queries.map { case (_, fn) => time(fn) }
+        queries.map { case (name, fn) => time(spark, name, fn, sfDir) }
       }.drop(1)
-    val samples: Seq[(String, Seq[Double])] = queries.zipWithIndex.map {
+    val samples: Seq[(String, Seq[Option[Double]])] = queries.zipWithIndex.map {
       case ((name, _), i) => name -> sweepTimes.map(_(i))
     }
+    val failed = samples.collect { case (k, v) if v.contains(None) => k }
     // Pointwise min across sweeps — the noise-robust estimator; a
     // contaminated sweep cannot poison a query that ran clean in any
-    // other sweep. Failed runs (-1) are excluded unless all failed.
-    def best(v: Seq[Double]): Double = {
-      val ok = v.filter(_ >= 0)
-      if (ok.isEmpty) -1.0 else ok.min
-    }
-    val results = samples.map { case (k, v) => k -> best(v) }
+    // other sweep. Failed samples are recorded as -1 and excluded;
+    // a query with no successful sample reports -1.
+    val results = samples.map { case (k, v) => k -> v.flatten.minOption.getOrElse(-1.0) }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val raw = samples.map { case (k, v) => "\"" + k + "\":" + v.mkString("[", ",", "]") }
+    val raw = samples.map { case (k, v) =>
+      "\"" + k + "\":" + v.map(_.getOrElse(-1.0)).mkString("[", ",", "]") }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
@@ -123,8 +138,10 @@ object Bench {
     val qv = results.map { case (_, v) =>
       if (v < 0) "-1" else math.round(v * 1000).toString
     }.mkString("[", ",", "]")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     println(
-      s"""{"metric":"total","value":$total,"unit":"sec","sweeps":$sweeps,"nqueries":${results.size},"env":$envFp,"sf":"$sfDir","file":"$outPath","qv":$qv}""")
+      s"""{"metric":"total","value":$total,"unit":"sec","sweeps":$sweeps,"nqueries":${results.size},"env":$envFp,"sf":"$sfDir","file":"$outPath","qv":$qv,"failed":$failedJson}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -1,32 +1,50 @@
 package graft
 
-/** Central registry of the per-(SparkSession, dir) shared-stage memos
-  * (louvainBase, minhashPairsBase, tfBase, ... — the r15 family
-  * memoization). Registration keeps the compute-once/consume-many
-  * production shape inside one logical run while giving measurement
-  * harnesses a seam to RESET all memos between repetitions: without
-  * it, a warm-sweep benchmark protocol times checkpoint reads instead
-  * of the operators (r15 verdict #3 — "bench-signal hollowing").
-  * [[graft.Bench]] calls [[reset]] at every sweep boundary so each
-  * sweep pays each shared stage exactly once; oracle/verify runs
-  * never reset, so their behavior is unchanged.
+import scala.collection.concurrent.TrieMap
+
+import org.apache.spark.sql.{Dataset, SparkSession}
+
+/** The one place that materialises or shares a frame.
+  *
+  * [[cut]] truncates lineage: a reliable `checkpoint()` when the
+  * context has a checkpoint dir (executor-loss safe on a cluster, a
+  * lost executor replays one round, not the whole chain), an
+  * executor-memory `localCheckpoint()` otherwise.
+  *
+  * [[shared]] builds a stage once per (session, dir, name) and hands
+  * the same value to every later caller — the compute-once /
+  * consume-many shape of the query families (louvainBase,
+  * minhashPairsBase, tfBase, ...). Builds may nest: one shared stage
+  * may read another inside its own build. Entries of stopped sessions
+  * are evicted on the next lookup, so a memo never outlives its
+  * session.
+  *
+  * [[reset]] drops every shared stage. [[graft.Bench]] calls it at
+  * every sweep boundary so each sweep pays each shared stage exactly
+  * once and times the operators, not checkpoint reads; oracle/verify
+  * runs never reset, so their behaviour is unchanged.
   */
 object MemoRegistry {
-  private val maps =
-    new java.util.concurrent.CopyOnWriteArrayList[
-      scala.collection.concurrent.TrieMap[_, _]]
+  private val memo = TrieMap.empty[(SparkSession, String, String), Any]
 
-  /** Register a memo map at definition site; returns it unchanged. */
-  def register[M <: scala.collection.concurrent.TrieMap[_, _]](m: M): M = {
-    maps.add(m)
-    m
+  /** Lineage cut: reliable checkpoint under a checkpoint dir, else
+    * localCheckpoint. Both are eager.
+    */
+  def cut[T](ds: Dataset[T]): Dataset[T] =
+    if (ds.sparkSession.sparkContext.getCheckpointDir.isDefined) ds.checkpoint()
+    else ds.localCheckpoint()
+
+  /** The stage `name` over `dir` in session `s`, built by `build` on
+    * first use. `name` must be unique per stage: two sites passing the
+    * same name share one value.
+    */
+  def shared[T](s: SparkSession, dir: String, name: String)(build: => T): T = {
+    memo.keysIterator.filter(_._1.sparkContext.isStopped).foreach(memo.remove)
+    memo.getOrElseUpdate((s, dir, name), build).asInstanceOf[T]
   }
 
-  /** Drop every memoized frame. Checkpoint blocks behind the dropped
+  /** Drop every shared stage. Checkpoint blocks behind the dropped
     * references are reclaimed by Spark's ContextCleaner once GC'd.
     */
-  def reset(): Unit = maps.forEach(_.clear())
-
-  /** Number of registered memo maps (spec hook). */
-  def size: Int = maps.size()
+  def reset(): Unit = memo.clear()
 }

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.core.GraftSession
+
 /** One-off sf1 scale rehearsal (r7 verdict #7): time the top-cost
   * operator families once at sf0.1 and once at a 10x generated sf1
   * (tools/gen_sf1.py), and record per-query ratios. A family whose
@@ -251,20 +253,9 @@ object ScaleRehearsal {
     // Optional 4th arg: comma-separated name filter (targeted reruns
     // merged via tools/scale_merge.py — the Verify filter discipline).
     val only: Option[Set[String]] = rest.headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def time(fn: (SparkSession, String) => DataFrame, dir: String): Double = {
-      val t0 = System.nanoTime()
-      try fn(spark, dir).count() catch { case _: Throwable => return -1.0 }
-      (System.nanoTime() - t0) / 1e9
-    }
+    val spark = GraftSession.get()
+    def time(name: String, fn: (SparkSession, String) => DataFrame, dir: String): Double =
+      Bench.time(spark, name, fn, dir).getOrElse(-1.0)
     // warm codegen/JIT at the small SF so the timed pairs compare
     // steady-state execution
     val selected = workload.filter { case (n, _) => only.forall(_.contains(n)) }
@@ -273,8 +264,8 @@ object ScaleRehearsal {
       catch { case _: Throwable => }
     }
     val rows = selected.map { case (name, fn) =>
-      val tb = time(fn, baseDir)
-      val tg = time(fn, bigDir)
+      val tb = time(name, fn, baseDir)
+      val tg = time(name, fn, bigDir)
       val ratio = if (tb > 0 && tg > 0) tg / tb else -1.0
       System.err.println(f"[scale] $name%-22s base=$tb%8.2fs big=$tg%8.2fs ratio=$ratio%6.2fx")
       (name, tb, tg, ratio)

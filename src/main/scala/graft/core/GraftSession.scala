@@ -2,17 +2,22 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Tuned local SparkSession factory.
+/** The one SparkSession factory: every graft main starts its session
+  * through [[get]] (or [[fromConfig]] for a cluster config).
   *
-  * Settings chosen for the `local[32]` CI box but documented for a
-  * 1000-executor cluster: AQE handles runtime skew-join splitting and
-  * post-shuffle partition coalescing; `shuffle.partitions` tracks core
-  * count locally (on a cluster: 2-3x total cores); UTC session time
-  * zone so results are reproducible against any SQL oracle.
+  * Settings documented for a 1000-executor cluster: AQE handles
+  * runtime skew-join splitting and post-shuffle partition coalescing
+  * (the flags restate Spark 4.1's defaults); `shuffle.partitions`
+  * tracks core count locally (on a cluster: 2-3x total cores); UTC
+  * session time zone so results are reproducible against any SQL
+  * oracle.
   */
 object GraftSession {
-  def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-              shufflePartitions: Int = 32): SparkSession.Builder =
+  /** Local cores: `SPARK_GRAFT_CPUS` when set, else the host's. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .appName("graft")
@@ -24,8 +29,9 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
+  /** `local[cpus]` with one shuffle partition per core. */
   def get(): SparkSession = {
-    val spark = builder().getOrCreate()
+    val spark = builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -49,9 +49,8 @@ object GraftFunctions {
       ((d(3) & 0xffL) << 16) | ((d(4) & 0xffL) << 8) | (d(5) & 0xffL)
   }
 
-  /** tokenHash reduced mod 1e9+7 (keeps a*h+b inside 2^63). */
+  /** Hash modulus 1e9+7 (keeps a*h+b inside 2^63). */
   val HashP = 1000000007L
-  def tokenHashP(c: Column): Column = tokenHash(c) % HashP
 
   /** Whitespace tokens of trimmed, lowercased text. */
   def tokens(c: Column): Column = split(lower(trim(c)), "\\s+")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.MemoRegistry
+import graft.MemoRegistry.cut
 import graft.functions.GraftFunctions._
 import graft.sources.Tables
 
@@ -185,35 +187,26 @@ object CorpusOps {
     * every retrieval rung, and the fixture-query BM25 ranking is
     * consumed verbatim by [[qBm25Search]] AND [[qRrfFusion]]'s
     * a-side — a production retrieval stack builds the index and runs
-    * each ranking once. Lineage-cut with the reliable-checkpoint
-    * discipline; every process invocation still computes from the
-    * parquet inputs, and all consumer oracle outputs are
+    * each ranking once. Both are shared and lineage-cut through
+    * [[graft.MemoRegistry]]; every process invocation still computes
+    * from the parquet inputs, and all consumer oracle outputs are
     * byte-identical.
+    *
+    * (doc_id, term, tf) — the retrieval index table.
     */
-  private def memoCutR(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
-
-  private val tfMemo = graft.MemoRegistry.register(
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
-
-  /** (doc_id, term, tf) — the retrieval index table. */
   private[graft] def tfBase(s: SparkSession, dir: String): DataFrame =
-    tfMemo.getOrElseUpdate((s, dir), memoCutR(
+    MemoRegistry.shared(s, dir, "tfMemo")(cut(
       Tables.documents(s, dir)
         .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
         .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))))
 
-  private val bm25Memo = graft.MemoRegistry.register(
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
-
   private def bm25FixtureBase(s: SparkSession, dir: String): DataFrame =
-    bm25Memo.getOrElseUpdate((s, dir), {
+    MemoRegistry.shared(s, dir, "bm25Memo") {
       import s.implicits._
       val qterms = Bm25Queries.toDF("qid", "qtext")
         .select(col("qid"), explode(tokens(col("qtext"))).as("term"))
-      memoCutR(bm25TopKFor(s, dir, qterms))
-    })
+      cut(bm25TopKFor(s, dir, qterms))
+    }
 
   def qBm25Search(s: SparkSession, dir: String): DataFrame =
     bm25FixtureBase(s, dir)

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.MemoRegistry
+import graft.MemoRegistry.cut
 import graft.functions.GraftFunctions._
 import graft.sources.Tables
 
@@ -219,9 +221,8 @@ object Curation {
     // the exploded chunk table feeds the occurrence count AND the
     // join back — cut once (r16 §8); uncut, the scan + chunk-hash
     // explode ran per consumer
-    val exploded = Tables.documents(s, dir)
-      .select(col("doc_id"), explode(chunkHashes("text")).as("ch"))
-      .localCheckpoint()
+    val exploded = cut(Tables.documents(s, dir)
+      .select(col("doc_id"), explode(chunkHashes("text")).as("ch")))
     val counts = exploded.groupBy(col("ch")).agg(count(lit(1)).as("n_occ"))
     exploded.join(counts, "ch")
       .groupBy(col("doc_id"))
@@ -270,7 +271,7 @@ object Curation {
     // the chunk table (position explode + prefix-sum window + the
     // collect_list reassembly) feeds the occurrence count AND the
     // join back — cut once (r16 §8)
-    val chunks = cdcChunks(Tables.documents(s, dir)).localCheckpoint()
+    val chunks = cut(cdcChunks(Tables.documents(s, dir)))
     val occ = chunks.groupBy(col("ch")).agg(count(lit(1)).as("n_occ"))
     chunks.join(occ, "ch")
       .groupBy(col("doc_id"))
@@ -718,10 +719,9 @@ object Curation {
         explode(tokens(col("text"))).as("w"))
       .withColumn("f", tokenHash(col("w")) % QcClassBuckets)
     val seed = tok.filter(col("role") =!= "unlabeled")
-    val cnt = seed.groupBy(col("f")).agg(
+    val cnt = cut(seed.groupBy(col("f")).agg(
       sum(when(col("role") === "hq", 1L).otherwise(0L)).as("ct"),
-      sum(when(col("role") === "lq", 1L).otherwise(0L)).as("cb"))
-      .localCheckpoint()
+      sum(when(col("role") === "lq", 1L).otherwise(0L)).as("cb")))
     // seed totals derive from the ≤QcClassBuckets-row count table —
     // NOT by re-tokenizing the seed docs (r6 advice: `tot` was a
     // third full tokenize pass; now tokenization runs twice — once
@@ -963,24 +963,19 @@ object Curation {
     * pipeline — exactly what a production curation run never does
     * (the verdict ledger is computed once; the report and the
     * release manifest read it). Lineage-cut with the reliable-
-    * checkpoint discipline shared with Dedup.connectedComponents;
+    * checkpoint discipline of [[graft.MemoRegistry.cut]];
     * every process invocation still computes it from the parquet
     * inputs, and all three oracle outputs are byte-identical.
     */
-  private val runFullMemo = graft.MemoRegistry.register(
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
-
   private def runFullBase(s: SparkSession, dir: String): DataFrame =
-    runFullMemo.getOrElseUpdate((s, dir), {
+    MemoRegistry.shared(s, dir, "runFullMemo") {
       val docs = Tables.documents(s, dir)
         .select(col("doc_id"), col("source"), col("text"))
       val doubled = docs.unionByName(docs.select(
         (col("doc_id") + Dedup.Shift).as("doc_id"), col("source"), col("text")))
-      val run = curationRunFull(doubled,
-        docs.filter(col("doc_id") % 100 === 0).select(col("doc_id"), col("text")))
-      if (s.sparkContext.getCheckpointDir.isDefined) run.checkpoint()
-      else run.localCheckpoint()
-    })
+      cut(curationRunFull(doubled,
+        docs.filter(col("doc_id") % 100 === 0).select(col("doc_id"), col("text"))))
+    }
 
   def qCurationRunFull(s: SparkSession, dir: String): DataFrame =
     runFullBase(s, dir)

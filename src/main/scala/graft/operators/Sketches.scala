@@ -295,44 +295,6 @@ object Sketches {
     if (raw <= 2.5 * m && zeros > 0) m * math.log(m / zeros.toDouble) else raw
   }
 
-  // --- xxhash64 fast-path twins --------------------------------------------
-
-  /** Production twins of the sketch builders: same shapes and merge
-    * laws, but the salted md5-prefix hash (two non-codegen md5 +
-    * string ops per probe — the ORACLE discipline, kept for the
-    * cross-engine rungs) is replaced by codegen'd xxhash64. The fast
-    * twins' VALUES differ from the oracle rungs by construction;
-    * their laws (grid row = stream partition, est ≥ exact, max/sum/
-    * union merges, estimator accuracy) are what SketchesSpec pins.
-    */
-  def cmBucketFast(w: Column, i: Int): Column =
-    pmod(xxhash64(w, lit(i)), lit(CmWidth))
-
-  def countMinSketchFast(terms: DataFrame): DataFrame =
-    terms.select(explode(array((0 until CmDepth).map(i =>
-        struct(lit(i.toLong).as("r"), cmBucketFast(col("w"), i).as("bucket"))): _*)).as("rb"))
-      .select(col("rb.r").as("r"), col("rb.bucket").as("bucket"))
-      .groupBy(col("r"), col("bucket")).agg(count(lit(1)).as("cnt"))
-
-  /** Fast-path rank cap: xxhash64 keeps 58 post-bucket bits. */
-  val HllZeroRankFast = 59L
-
-  def hllRegistersFast(terms: DataFrame): DataFrame = {
-    val h = xxhash64(col("w"))
-    val rest = shiftrightunsigned(h, 6)
-    terms
-      .select(col("source"), pmod(h, lit(HllM)).as("bucket"),
-        when(rest === 0L, lit(HllZeroRankFast))
-          .otherwise(length(bin(rest.bitwiseAND(-rest))).cast("long")).as("rank"))
-      .groupBy(col("source"), col("bucket"))
-      .agg(max(col("rank")).as("max_rank"))
-  }
-
-  def bloomBitsFast(members: DataFrame): DataFrame =
-    members.select(explode(array((0 until BloomK).map(i =>
-        pmod(xxhash64(col("w"), lit(i)), lit(BloomBits))): _*)).as("pos"))
-      .distinct()
-
   // --- portable bloom filter -----------------------------------------------
 
   /** Bloom geometry for the membership artifact: 4096 bits × 3

@@ -258,47 +258,6 @@ class SketchesSpec extends AnyFunSuite {
     assert(math.abs(est - 7000.0) / 7000.0 < 0.35, s"union estimate $est")
   }
 
-  test("fast-path twins (xxhash64) obey the same laws as the oracle rungs") {
-    val docs = sources.Tables.documents(spark, sf)
-    val terms = docs.select(
-      explode(graft.functions.GraftFunctions.tokens(col("text"))).as("w"))
-    val n = terms.count()
-    // count-min fast: every grid row still partitions the stream,
-    // and split grids still merge by elementwise sum
-    val key = (r: org.apache.spark.sql.Row) => (r.getLong(0), r.getLong(1))
-    val grid = Sketches.countMinSketchFast(terms).collect()
-      .map(r => key(r) -> r.getLong(2)).toMap
-    (0 until Sketches.CmDepth).foreach { i =>
-      assert(grid.collect { case ((r, _), c) if r == i.toLong => c }.sum == n)
-    }
-    val half = (m: Int) => Sketches.countMinSketchFast(
-        docs.filter(col("doc_id") % 2 === m).select(
-          explode(graft.functions.GraftFunctions.tokens(col("text"))).as("w")))
-      .collect().map(r => key(r) -> r.getLong(2)).toMap
-    val (l, r2) = (half(0), half(1))
-    assert((l.keySet ++ r2.keySet).map(k =>
-      k -> (l.getOrElse(k, 0L) + r2.getOrElse(k, 0L))).toMap == grid)
-    // hll fast: estimator lands near the synthetic stream's exact
-    // cardinality, registers bounded by the fast rank cap
-    val syn = spark.range(0, 7000)
-      .select(lit("s").as("source"), concat(lit("t"), col("id")).as("w"))
-    val reg = Sketches.hllRegistersFast(syn).collect()
-      .map(r => r.getLong(1) -> r.getLong(2)).toMap
-    assert(reg.values.forall(v => v >= 1 && v <= Sketches.HllZeroRankFast))
-    val est = Sketches.hllEstimate(reg)
-    assert(math.abs(est - 7000.0) / 7000.0 < 0.35, s"fast estimate $est")
-    // bloom fast: a member's probes are all set (no false negatives),
-    // and split bit sets merge by union
-    val members = terms.distinct()
-    val bits = Sketches.bloomBitsFast(members).collect().map(_.getLong(0)).toSet
-    assert(bits.nonEmpty && bits.size <= Sketches.BloomBits)
-    val probed = members.select(col("w"),
-        explode(array((0 until Sketches.BloomK).map(i =>
-          pmod(xxhash64(col("w"), lit(i)), lit(Sketches.BloomBits))): _*)).as("pos"))
-      .collect().map(_.getLong(1))
-    assert(probed.forall(bits.contains), "fast bloom false negative")
-  }
-
   test("hll rank law: rank r occurs iff hash remainder has r-1 trailing zeros") {
     // driver-side replay of the rank arithmetic on real token hashes
     val words = Seq("alpha", "beta", "gamma", "delta", "row", "scan")

@@ -2,15 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test run. */
+import graft.core.GraftSession
+
+/** One shared local session for the whole test run: the production
+  * factory's builder plus test-only confs.
+  */
 object SparkSuite {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder("local[4]", 4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       // test sizing for the streaming index tables: production
@@ -19,7 +19,6 @@ object SparkSuite {
       // stay test-speed-friendly, and the saturation spec dials the
       // conf down to prove the key-pushdown level independently
       .config(graft.streaming.DocStreams.IndexBucketsConf, "32")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
